@@ -14,6 +14,7 @@ role in the reference (README.md:128-132) — works against them.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -103,6 +104,88 @@ def ensure_nanos_as_long(spark: SparkSession) -> None:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
 
+# ── Parquet schema memo ──────────────────────────────────────────────────────
+# spark.read.parquet(path) runs a one-task schema-inference job (a footer
+# read) on every call. Lake tables are rewritten rarely and read often, so
+# the inferred schema is memoized per absolute path and validated on each
+# use against a stat-only file signature plus the session confs that
+# change inferred types. A rewrite changes the signature and overwrites
+# that path's entry: the memo grows with distinct paths, not versions.
+
+# session confs that change the schema parquet inference produces
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+# abspath -> (file signature, inference confs, schema). Unlocked: each
+# entry is one tuple validated on every read, so racing threads cost at
+# most a repeated inference, never a stale schema.
+_SCHEMA_MEMO: dict[str, tuple[tuple, tuple, T.StructType]] = {}
+
+
+def _visible(name: str) -> bool:
+    """Whether Spark's file index treats a file or directory name as part
+    of the table: hidden names start with ``.`` or ``_`` (``_SUCCESS``,
+    ``.crc``, ``_temporary``, ``.spark-staging-*``), except ``_`` names
+    holding ``=`` (partition directories)."""
+    return not (
+        name.startswith(".")
+        or (name.startswith("_") and "=" not in name)
+        or name.endswith("._COPYING_")
+    )
+
+
+def visible_files(path: str):
+    """Yield (relpath, os.stat_result) of every visible file under the
+    local directory ``path``, pruning hidden directories."""
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if _visible(d)]
+        for f in files:
+            if _visible(f):
+                full = os.path.join(root, f)
+                yield os.path.relpath(full, path), os.stat(full)
+
+
+def file_signature(path: str) -> tuple | None:
+    """Stat-only identity of a local parquet table, or None when ``path``
+    does not exist locally. A file: (size, mtime_ns, inode). A directory:
+    the sorted (relpath, size, mtime_ns) of its visible files — partition
+    directory names are part of the relpaths, so partition-column type
+    inference is covered too."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISDIR(st.st_mode):
+        return (st.st_size, st.st_mtime_ns, st.st_ino)
+    return tuple(sorted((rel, s.st_size, s.st_mtime_ns) for rel, s in visible_files(path)))
+
+
+def read_parquet(spark: SparkSession, path: str) -> tuple[DataFrame, T.StructType]:
+    """``spark.read.parquet(path)`` and its schema, without the per-call
+    schema-inference job once the schema is memoized. Every call returns
+    a NEW relation (fresh attribute ids, so self-joins stay unambiguous);
+    no DataFrame or data is cached. A path that does not exist locally
+    bypasses the memo, so Spark raises its own error as before."""
+    key = os.path.abspath(path)
+    sig = file_signature(key)
+    if sig is None:
+        df = spark.read.parquet(path)
+        return df, df.schema
+    confs = tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS)
+    hit = _SCHEMA_MEMO.get(key)
+    if hit is not None and hit[0] == sig and hit[1] == confs:
+        return spark.read.schema(hit[2]).parquet(path), hit[2]
+    df = spark.read.parquet(path)
+    _SCHEMA_MEMO[key] = (sig, confs, df.schema)
+    return df, df.schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar parquet scan; Catalyst handles column pruning + predicate
     pushdown, so callers should filter/select on the returned DataFrame
@@ -119,14 +202,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         ensure_nanos_as_long(spark)
-        df = spark.read.parquet(path)
-        dt = dict(df.dtypes).get("ts")
-        if dt == "bigint":
+    df, schema = read_parquet(spark, path)
+    if name == "events" and "ts" in schema.names:
+        dt = schema["ts"].dataType
+        if isinstance(dt, T.LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif dt == "timestamp_ntz":
+        elif isinstance(dt, T.TimestampNTZType):
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    return spark.read.parquet(path)
+    return df
 
 
 # Lake-contract primary keys (the reference's Glue DDL treats these id
@@ -148,11 +231,12 @@ TABLE_PRIMARY_KEYS = {
     # it — validate-lake reports it as info only.
 }
 
-# (abspath(sf_dir), table, key) triples already verified this process.
-# Lake paths are immutable within a run (batch contract), so one loud
-# one-aggregate check per lake+table amortizes to zero across the
-# bench's warm passes and repeated query invocations.
-_PK_VERIFIED: set[tuple[str, str, str]] = set()
+# (abspath(sf_dir), table, key, file signature) tokens already verified
+# this process. One loud one-aggregate check per table version amortizes
+# to zero across the bench's warm passes and repeated query invocations;
+# rewriting the table at the same path changes its signature, so the
+# new contents are checked again.
+_PK_VERIFIED: set[tuple[str, str, str, tuple | None]] = set()
 
 
 def load_table_pk(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -165,14 +249,17 @@ def load_table_pk(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     PK-violating input. Those queries load their keyed table through
     this wrapper so such input raises ``DuplicateKeyError`` instead of
     silently returning different numbers. One extra count/count-distinct
-    aggregate per (lake, table) per process (cached; column-pruned scan
-    of just the key column).
+    aggregate per table version per process (cached on the table's file
+    signature; column-pruned scan of just the key column).
     """
     from .validation import require_unique_key
 
+    # signature first: a rewrite racing the check yields a newer
+    # signature on the next call, never a stale "verified" token
+    sig = file_signature(os.path.join(sf_dir, f"{name}.parquet"))
     df = load_table(spark, sf_dir, name)
     key = TABLE_PRIMARY_KEYS[name]
-    token = (os.path.abspath(sf_dir), name, key)
+    token = (os.path.abspath(sf_dir), name, key, sig)
     if token not in _PK_VERIFIED:
         require_unique_key(df.select(key), key, name)
         _PK_VERIFIED.add(token)

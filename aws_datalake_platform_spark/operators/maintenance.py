@@ -27,6 +27,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..catalog import visible_files
+
 
 def merge_upsert(
     spark: SparkSession,
@@ -93,23 +95,24 @@ def merge_upsert(
 
 
 def partition_file_stats(spark: SparkSession, path: str, partition_cols: list[str]) -> dict:
-    """{partition_value_tuple: (n_files, total_bytes)} from the file
-    index. Local-FS implementation (os.stat); on a cluster the same
-    numbers come from the Hadoop FileSystem listing."""
-    df = spark.read.parquet(path)
+    """{partition_value_tuple: (n_files, total_bytes)} from a listing of
+    the files Spark's file index would read (hidden ``_``/``.`` files and
+    directories skipped). Local-FS implementation (os.walk + os.stat) —
+    no Spark job; on a cluster the same numbers come from the Hadoop
+    FileSystem listing. Raises FileNotFoundError unless ``path`` is a
+    directory."""
+    if not os.path.isdir(path):
+        raise FileNotFoundError(f"not a table directory: {path}")
     stats: dict[tuple, list[int]] = {}
-    for f in df.inputFiles():
-        local = f.removeprefix("file:")
+    for rel, st in visible_files(path):
         parts = []
-        for seg in local.split(os.sep):
-            if "=" in seg:
-                k, _, v = seg.partition("=")
-                if k in partition_cols:
-                    parts.append(v)
-        key = tuple(parts)
-        n_b = stats.setdefault(key, [0, 0])
+        for seg in rel.split(os.sep)[:-1]:
+            k, eq, v = seg.partition("=")
+            if eq and k in partition_cols:
+                parts.append(v)
+        n_b = stats.setdefault(tuple(parts), [0, 0])
         n_b[0] += 1
-        n_b[1] += os.path.getsize(local)
+        n_b[1] += st.st_size
     return {k: (v[0], v[1]) for k, v in stats.items()}
 
 

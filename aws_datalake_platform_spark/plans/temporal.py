@@ -13,7 +13,7 @@ import re as _re
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import ensure_nanos_as_long, load_table
+from ..catalog import ensure_nanos_as_long, load_table, read_parquet
 from ..operators.asof import asof_join, range_join_count, sessionize
 from .queries import register
 
@@ -148,7 +148,7 @@ def _events_stream(spark: SparkSession, sf_dir: str):
     from pyspark.sql import types as T
 
     ensure_nanos_as_long(spark)  # guarded: driver-owned sessions only
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    _, schema = read_parquet(spark, f"{sf_dir}/events.parquet")
     sdf = (
         spark.readStream.schema(schema)
         # glob form: FileStreamSource only sets basePath=path (a file, which

@@ -20,6 +20,13 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS"
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
+def default_driver_memory() -> str:
+    """Half of physical RAM, capped at 48g: a fixed 48g heap let the
+    driver JVM outgrow a 16 GB host before collecting garbage."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(48 << 10, ram_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "aws_datalake_platform_spark",
     master: str | None = None,
@@ -70,7 +77,7 @@ def get_spark(
         # r4). 1 MB keeps events useful and bounds the cost.
         .config("spark.sql.maxPlanStringLength", str(1024 * 1024))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", default_driver_memory()))
     )
     if master is not None:
         builder = builder.master(master)

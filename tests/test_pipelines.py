@@ -425,6 +425,37 @@ def test_compact_partitions_reduces_files(spark, tmp_path):
     assert before == after
 
 
+def test_partition_file_stats_lists_without_spark(spark, tmp_path):
+    """The listing skips hidden files/dirs, parses k=v only below the
+    table path, submits no Spark job, and raises on a missing path."""
+    import pytest
+
+    from aws_datalake_platform_spark.operators.maintenance import partition_file_stats
+
+    path = tmp_path / "x=9" / "t"  # k=v above the table: not a partition
+    spark.range(0, 100).select(
+        F.col("id"), (F.col("id") % 2).cast("string").alias("part")
+    ).repartition(3).write.partitionBy("part").parquet(str(path))
+    (path / "_temporary" / "0").mkdir(parents=True)
+    (path / "_temporary" / "0" / "part-0.parquet").write_bytes(b"junk")
+    (path / "part=0" / ".spark-staging-1").mkdir()
+    (path / "part=0" / ".spark-staging-1" / "f.parquet").write_bytes(b"junk")
+    expected = {}
+    for f in path.rglob("*.parquet"):
+        if f.parent.name.startswith("part="):
+            n_b = expected.setdefault((f.parent.name[5:],), [0, 0])
+            n_b[0] += 1
+            n_b[1] += f.stat().st_size
+    jobs = spark.sparkContext._jsc.sc().dagScheduler()
+    before = jobs.nextJobId()
+    stats = partition_file_stats(spark, str(path), ["x", "part"])
+    assert jobs.nextJobId() == before
+    assert stats == {k: tuple(v) for k, v in expected.items()}
+    assert set(stats) == {("0",), ("1",)}
+    with pytest.raises(FileNotFoundError):
+        partition_file_stats(spark, str(tmp_path / "absent"), ["part"])
+
+
 def test_orc_roundtrip_partitioned(spark, tmp_path):
     from aws_datalake_platform_spark.catalog import load_table
     from aws_datalake_platform_spark.sources.io import read_orc, write_orc

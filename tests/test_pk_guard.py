@@ -124,3 +124,14 @@ def test_validate_lake_cli(spark, dup_lake, capsys):
     assert main(["validate-lake", "--sf-dir", SF_SMOKE]) == 0
     out = capsys.readouterr().out
     assert "validate-lake: ok" in out
+
+
+def test_guard_rechecks_table_rewritten_in_place(spark, tmp_path):
+    src = pq.read_table(f"{SF_SMOKE}/documents.parquet").slice(0, 3)
+    path = tmp_path / "documents.parquet"
+    pq.write_table(src, path)
+    assert load_table_pk(spark, str(tmp_path), "documents").count() == 3
+    # same path, same row count, one id now duplicated
+    pq.write_table(pa.concat_tables([src.slice(0, 2), src.slice(0, 1)]), path)
+    with pytest.raises(DuplicateKeyError, match=r"documents\.doc_id"):
+        load_table_pk(spark, str(tmp_path), "documents")
